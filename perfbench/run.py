@@ -23,6 +23,8 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+# the repository's own oracle comparison (tools/compare.py)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 BUILD = os.path.join(HERE, ".build")
 WORKLOADS = ("editor", "suite", "scale", "ingest")
 JVM_TIMEOUT_S = 170
@@ -169,23 +171,10 @@ def jvm_command(cp, work, extra):
 
 # ---------------------------------------------------------- oracle checks
 
-def canon(rows, cols):
-    """Columns sorted by name, floats rounded to 6 places, rows sorted:
-    the comparison graft's own compare tool makes."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                v = round(v, 6)
-            vals.append(str(v))
-        out.append(tuple(vals))
-    return sorted(out), [cols[i] for i in order]
-
-
 def same_result(got_rows, got_cols, want_rows, want_cols):
+    """Compares after the canonical form of tools/compare.py: columns
+    sorted by name, floats rounded to 6 places, rows sorted."""
+    from compare import canon
     g, gc = canon(got_rows, got_cols)
     w, wc = canon(want_rows, want_cols)
     if gc != wc:

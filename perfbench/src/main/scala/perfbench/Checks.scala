@@ -153,6 +153,20 @@ object Checks {
       else s"${bad.size}/${pairs.size} pairs wrong, first ${bad.head}")
   }
 
+  /** Per document, its `width`-character windows and how many of them
+    * occur more than once in the whole corpus, by exact text:
+    * id -> (windows, repeated windows, repeated per mille). */
+  def windowRepeats(texts: Vector[(Long, String)], width: Int): Map[Long, (Long, Long, Long)] = {
+    def windows(t: String) = (0 to t.length - width).iterator.map(i => t.substring(i, i + width))
+    val count = mutable.HashMap.empty[String, Int]
+    texts.foreach { case (_, t) => windows(t).foreach(w => count(w) = count.getOrElse(w, 0) + 1) }
+    texts.map { case (id, t) =>
+      val n = math.max(t.length - width + 1, 0).toLong
+      val rep = windows(t).count(count(_) > 1).toLong
+      id -> (n, rep, rep * 1000 / math.max(n, 1))
+    }.toMap
+  }
+
   /** Two row sets are equal (delta maintenance against a rebuild). */
   def sameRows[T](name: String, got: Set[T], want: Set[T]): Check =
     Check(name, got == want && want.nonEmpty,

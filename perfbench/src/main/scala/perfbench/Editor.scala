@@ -24,12 +24,18 @@ final class EditorWorkload(o: Opts) extends Workload {
 
   val Pages = 80
   val OpsPerRound = 600 // 24 cycles of OpKinds
+  val roundSeconds = 4.7
   val Published = 3
 
   final class Page(var id: Gid, var lines: Vector[Line], var blocks: Vector[Gid])
 
-  /** One round's state: publisher and subscriber databases. */
+  /** One round's state: publisher and subscriber databases, and the
+    * broadcast hub between them, served over loopback REST. Each round
+    * gets its own hub, so episode blobs of earlier rounds (kept 24 h)
+    * do not pile up across rounds. */
   final class Web {
+    val hub = new BroadcastHub
+    val service = new BroadcastService(hub).start()
     val pub = new GraftDb
     val sub = new GraftDb
     val pubClient = new BroadcastClient(pub, new HttpBroadcastEndpoint(service.baseUrl))
@@ -39,18 +45,12 @@ final class EditorWorkload(o: Opts) extends Workload {
     val broadcasts = ArrayBuffer.empty[(Int, Gid)]
   }
 
-  private var hub: BroadcastHub = _
-  private var service: BroadcastService = _
   private var web: Web = _
   // position of every sync in its round, for the first/last tenth split
   private val syncSlot = ArrayBuffer.empty[Int]
   private var syncsPerRound = 0
 
-  override def open(): Unit = {
-    hub = new BroadcastHub
-    service = new BroadcastService(hub).start()
-  }
-  override def close(): Unit = if (service != null) service.stop()
+  override def close(): Unit = if (web != null) web.service.stop()
 
   private def pick[T](r: SplittableRandom, xs: IndexedSeq[T]): T = xs(r.nextInt(xs.length))
   private def words(r: SplittableRandom, n: Int): Vector[String] = Vector.fill(n)(pick(r, Gen.Vocab))
@@ -120,6 +120,7 @@ final class EditorWorkload(o: Opts) extends Workload {
   }
 
   private def build(): Web = {
+    if (web != null) web.service.stop()
     val w = new Web
     val r = new SplittableRandom(o.seed)
     lineNo = 0
@@ -226,11 +227,13 @@ final class EditorWorkload(o: Opts) extends Workload {
     ops(rec, OpsPerRound)
   }
 
-  /** Operation kinds, in a fixed cycle of 25: 11 syncs (S), a publish
-    * (P) and a fetch (F); 8 refreshes (R), 2 searches (Q), an overlap
+  /** Operation kinds, in a fixed cycle of 25: 12 syncs (S), a publish
+    * (P) and a fetch (F); 7 refreshes (R), 2 searches (Q), an overlap
     * read (O) and a sibling read (B). Targets depend on the seed.
-    * Refreshes, the common read of an editor, are two thirds of the
-    * reads, so the read median falls inside one kind of operation. */
+    * The proportions are assumed, not observed: the reference records
+    * no traffic mix. Syncs are half the operations because every edit
+    * of the reference editor is a sync; refreshes are most of the reads
+    * so that the read median is that of one kind of operation. */
   private val OpKinds = "SRSQSRSOSRSPSRSQSRSBSRSRF"
 
   private def ops(rec: Recorder, n: Int): Unit = {

@@ -14,11 +14,13 @@ import graft.streaming.Streams
 /** `ingest`: a seeded stream of new documents (with planted
   * near-duplicates) and embeddings, folded one batch at a time into a
   * `Streams.DedupGate` and a `Streams.VectorIndexGate`, with k-NN
-  * searches between folds. A round is one compaction cycle: resume both
-  * gates from their last persisted state, then `Folds` times
-  * `SearchesPerFold` k-NN searches and a fold of one batch into both
-  * gates, then persist both gates.
-  * Warm-up folds run first, so the timed rounds start past JIT warm-up.
+  * searches between folds. Warm-up folds run first and persist the
+  * gates to a base store, so the timed rounds start past JIT warm-up.
+  * A round is one compaction cycle: resume both gates from the base
+  * store, then `Folds` times `SearchesPerFold` k-NN searches and a fold
+  * of one batch into both gates, then persist both gates to an empty
+  * round store. Every round starts from the same state and folds the
+  * same batches, so rounds are alike however many a run makes.
   */
 final class IngestWorkload(o: Opts) extends Workload {
   val InitDocs = 400
@@ -26,6 +28,7 @@ final class IngestWorkload(o: Opts) extends Workload {
   val Batch = 40
   /** Folds between compactions, and per round. */
   val Folds = 4
+  val roundSeconds = 10.4
   val WarmupFolds = 3
   val Centroids = 8
   val K = 10
@@ -39,9 +42,11 @@ final class IngestWorkload(o: Opts) extends Workload {
   private var counters: Option[SparkCounters] = None
   private var dedup: Streams.DedupGate = _
   private var vectors: Streams.VectorIndexGate = _
+  private var baseDedup: ManifestStore = _
+  private var baseVectors: ManifestStore = _
   private var dedupStore: ManifestStore = _
   private var vectorStore: ManifestStore = _
-  private var fed = 0 // batches folded so far
+  private var fed = 0 // batches folded into the live gates
   private var texts: Vector[String] = Vector.empty
   private var vecs: Vector[(Array[Float], Int)] = Vector.empty
   private lazy val queryVecs = Gen.embeddings(o.seed ^ 0x9e7L, Queries)
@@ -99,8 +104,8 @@ final class IngestWorkload(o: Opts) extends Workload {
     release()
     Sessions.cleanup(spark)
     deleteTree(Paths.get(s"${o.work}/stores"))
-    dedupStore = new ManifestStore(spark, storeDir("dedup"))
-    vectorStore = new ManifestStore(spark, storeDir("vectors"))
+    baseDedup = new ManifestStore(spark, storeDir("base-dedup"))
+    baseVectors = new ManifestStore(spark, storeDir("base-vectors"))
     ensure(InitDocs, InitVecs)
     dedup = Streams.newDedupGate(docFrame(0, InitDocs), "doc_id", "text", compactEvery = Folds)
     vectors = Streams.newVectorIndexGate(
@@ -119,20 +124,27 @@ final class IngestWorkload(o: Opts) extends Workload {
   }
   private def search(): Array[Row] =
     Trace.span("streaming.search")(vectors.search(queryFrame, "vec_id", "embedding").collect())
-  private def persist(): Unit = Trace.span("streaming.persist") {
-    dedup.persist(dedupStore)
-    vectors.persist(vectorStore)
+  private def persist(d: ManifestStore, v: ManifestStore): Unit = Trace.span("streaming.persist") {
+    dedup.persist(d)
+    vectors.persist(v)
   }
-  private def resume(): Unit = Trace.span("streaming.resume") {
+  private def resume(d: ManifestStore, v: ManifestStore): Unit = Trace.span("streaming.resume") {
     release()
-    dedup = Streams.resumeDedupGate(dedupStore, "doc_id", "text", compactEvery = Folds)
-    vectors = Streams.resumeVectorIndexGate(vectorStore, k = K, compactEvery = Folds)
+    dedup = Streams.resumeDedupGate(d, "doc_id", "text", compactEvery = Folds)
+    vectors = Streams.resumeVectorIndexGate(v, k = K, compactEvery = Folds)
   }
 
   def warmup(): Unit = {
     (0 until WarmupFolds).foreach { _ => search(); foldDocs(); foldVecs(); fed += 1 }
-    persist()
-    resume()
+    persist(baseDedup, baseVectors)
+    resume(baseDedup, baseVectors)
+  }
+
+  /** Empty stores for one round's persist. */
+  private def freshRoundStores(): Unit = {
+    Seq("dedup", "vectors").foreach(n => deleteTree(Paths.get(storeDir(n))))
+    dedupStore = new ManifestStore(spark, storeDir("dedup"))
+    vectorStore = new ManifestStore(spark, storeDir("vectors"))
   }
 
   /** Fold counters after each fold (traced run only). */
@@ -146,7 +158,9 @@ final class IngestWorkload(o: Opts) extends Workload {
   }
 
   def round(rec: Recorder): Unit = {
-    rec.op(update = true)(resume())
+    freshRoundStores()
+    fed = WarmupFolds
+    rec.op(update = true)(resume(baseDedup, baseVectors))
     (0 until Folds).foreach { _ =>
       (0 until SearchesPerFold).foreach(_ => rec.op(update = false)(search()))
       val j0 = counters.map(_.snap(spark).jobs).getOrElse(0L)
@@ -154,7 +168,7 @@ final class IngestWorkload(o: Opts) extends Workload {
       fed += 1
       counters.foreach(c => observeFold(c.snap(spark).jobs - j0))
     }
-    rec.op(update = true)(persist())
+    rec.op(update = true)(persist(dedupStore, vectorStore))
     if (o.trace) manifestMb = Seq("dedup", "vectors").map(n => dirMb(Paths.get(storeDir(n)))).sum
   }
 
@@ -182,7 +196,7 @@ final class IngestWorkload(o: Opts) extends Workload {
     // Resume equivalence: a gate resumed from the last persisted state
     // and the live gate fold the same further batch; their whole
     // decision logs must be equal.
-    persist()
+    persist(dedupStore, vectorStore)
     val liveD = dedup
     val liveV = vectors
     val resumedD = Streams.resumeDedupGate(dedupStore, "doc_id", "text", compactEvery = Folds)

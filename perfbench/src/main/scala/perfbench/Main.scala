@@ -80,8 +80,14 @@ trait Workload {
     * replacing any earlier state. */
   def prepare(): Unit
   def warmup(): Unit
-  /** One whole round of timed operations. */
+  /** One whole round of timed operations. Every round runs the same
+    * operations from the same state. */
   def round(rec: Recorder): Unit
+  /** Wall seconds of one round, as measured on a 4-core host. A run
+    * makes ceil(--seconds / roundSeconds) rounds: its work is fixed by
+    * `--seconds`, not by how fast the rounds go, so a faster program
+    * does the same operations in less time. */
+  def roundSeconds: Double
   /** Per-layer metrics of the traced run, read after the timed phase;
     * each value is (value, unit). */
   def layers(rec: Recorder): Map[String, (Double, String)]
@@ -133,17 +139,19 @@ object Main {
       wl.prepare()
       (System.nanoTime() - t0) / 1e6
     }
+    val w0 = System.nanoTime()
     wl.warmup()
     val timedStartMs = System.currentTimeMillis()
     val setupS = (timedStartMs - o.launchMs - prepMs.sum + median(prepMs)) / 1000.0
+    System.err.println(f"[perfbench] setup: prepare ${prepMs.map(_.round).mkString("/")} ms, " +
+      f"warm-up ${(System.nanoTime() - w0) / 1e6}%.0f ms, setup_s $setupS%.3f")
 
     Trace.reset()
     Trace.enabled = o.trace
     val rec = new Recorder
     val j0 = Jvm.snap()
-    var rounds = 0
-    val budgetNs = o.seconds * 1000000000L
-    while (rec.wallNs < budgetNs) { wl.round(rec); rounds += 1 }
+    val rounds = math.max(1, math.ceil(o.seconds / wl.roundSeconds).toInt)
+    (1 to rounds).foreach(_ => wl.round(rec))
     val jvm = Jvm.snap() - j0
     Trace.enabled = false
     val counterNs = Trace.counterNs

@@ -85,6 +85,11 @@ object SelfTest {
     out += expect("jaccard.wrong_inter", Checks.jaccardPairs("j", sh, Vector((1L, 2L, 5L, 6L))), ok = false)
     out += expect("jaccard.below_threshold", Checks.jaccardPairs("j", sh, Vector((1L, 3L, 0L, 7L))), ok = false)
 
+    // Repeated windows: "abcd" occurs in both texts, "bcde" in one.
+    val reps = Checks.windowRepeats(Vector(1L -> "abcde", 2L -> "xabcd", 3L -> "ab"), 4)
+    out += Check("window_repeats.fixture",
+      reps == Map(1L -> ((2L, 1L, 500L)), 2L -> ((2L, 1L, 500L)), 3L -> ((0L, 0L, 0L))), s"$reps")
+
     // Row-set equality.
     out += expect("rows.real", Checks.sameRows("r", Set(1 -> 2, 3 -> 4), Set(3 -> 4, 1 -> 2)), ok = true)
     out += expect("rows.perturbed", Checks.sameRows("r", Set(1 -> 2, 3 -> 5), Set(3 -> 4, 1 -> 2)), ok = false)
